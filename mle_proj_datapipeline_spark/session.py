@@ -38,12 +38,19 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    """Build (or fetch) the engine SparkSession.
+    """Build the engine SparkSession, or return the live one untouched.
 
-    Safe to call repeatedly — Spark returns the active session. When the
-    driver hands us an existing session (``__spark_entry__.entry``), we
-    never call this; engine code must work on any session.
+    The arguments apply only when no session is active. A live session
+    is returned as it is: the builder's ``getOrCreate`` would re-apply
+    its SQL confs (shuffle partitions, AQE, broadcast threshold) to the
+    shared session and change the settings of every other caller.
+    ``tune_session`` is the one sanctioned conf mutator. When the driver
+    hands us an existing session (``__spark_entry__.entry``), we never
+    call this; engine code must work on any session.
     """
+    live = SparkSession.getActiveSession()
+    if live is not None:
+        return live
     par = default_parallelism()
     builder = (
         SparkSession.builder.appName(app_name)

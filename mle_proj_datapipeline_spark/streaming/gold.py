@@ -1,11 +1,13 @@
 """Streaming gold layer: incremental feature/label-store maintenance.
 
 The reference rebuilds gold once a week after four FileSensors fire
-(dags/dag.py:110-140, 202-213). Here the same semantics are a
-checkpointed file-source stream per silver table: when new silver
-partitions land, exactly the affected ``snapshot_week`` gold partitions
-are recomputed and dynamically overwritten — incremental view
-maintenance at partition granularity.
+(dags/dag.py:110-140, 202-213). Here the same semantics are ONE
+checkpointed stream over the union of the four silver tables' file
+sources: when new silver partitions land in any of them, exactly the
+affected ``snapshot_week`` gold partitions are recomputed and
+dynamically overwritten — incremental view maintenance at partition
+granularity. A week that lands in all four tables is rebuilt once, not
+once per table.
 
 Cross-source alignment (the part Airflow did with sensors): a week
 enters gold only when ALL four silver tables have that week's partition
@@ -13,6 +15,17 @@ enters gold only when ALL four silver tables have that week's partition
 deferred and self-heal: every maintenance pass also rebuilds any
 complete week still missing from gold, so whichever source lands last
 triggers the build.
+
+Exactly-once: the rebuild runs inside ``foreachBatch``, before the
+micro-batch commits. A crash mid-rebuild leaves the batch uncommitted,
+so the next run replays it and the revised weeks are rebuilt then.
+
+Checkpoint layout: one checkpoint at ``<checkpoint_root>/silver_union``
+whose sources 0..3 are the tables in ``SILVER_TABLES`` order (reordering
+the tuple invalidates it). Per-table checkpoints under
+``<checkpoint_root>/<table>`` from the former one-stream-per-table
+layout are not read; the first run on an old root replays every silver
+file once, which rebuilds every complete week once (idempotent).
 
 Scale design (100 TB):
 - Completeness checks read only partition VALUES (directory listing via
@@ -23,16 +36,18 @@ Scale design (100 TB):
 - Encoding dictionaries (``emp_title_top``) are caller-pinned, fixing
   the reference's per-batch StringIndexer drift (SURVEY §4.2): every
   incremental build emits the same gold schema.
-- The four AvailableNow streams are run serially — one writer per gold
-  partition at a time. On a cluster with concurrent arrivals, put a
-  transactional table format under the gold root or route all four
-  sources through one maintenance queue.
+- One query is one writer: micro-batches run serially, so each gold
+  partition has one writer at a time. Concurrent callers on the same
+  roots still need a transactional table format under the gold root.
 """
 
 from __future__ import annotations
 
+from functools import reduce
+
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StringType, StructField, StructType
 from pyspark.sql.utils import AnalysisException
 
 from mle_proj_datapipeline_spark.plans.medallion import (
@@ -43,6 +58,10 @@ from mle_proj_datapipeline_spark.plans.medallion import (
 from mle_proj_datapipeline_spark.streaming.weekly import file_stream
 
 SILVER_TABLES = ("credit_history", "demographic", "financial", "loan_terms")
+# The maintenance stream reads only the partition column, as a string:
+# its values come from the directory names, so the stream needs no
+# parquet schema inference (one Spark job per table) and no data pages.
+WEEK_ONLY = StructType([StructField("snapshot_week", StringType())])
 
 
 def partition_weeks(spark: SparkSession, path: str) -> set[str]:
@@ -112,36 +131,33 @@ def incremental_gold(
     gold_root: str,
     checkpoint_root: str,
     emp_title_top: list[str],
-    timeout_s: int = 120,
+    timeout_s: float = 120,
 ) -> list[str]:
-    """Run one AvailableNow maintenance pass per silver table: new silver
-    files → affected/completed weeks rebuilt in gold, exactly once per
-    file (per-table checkpoints). Serial execution = single writer.
-    Returns all weeks rebuilt across the four passes."""
+    """Run one AvailableNow maintenance stream over all four silver
+    tables: new silver files → affected/completed weeks rebuilt in gold,
+    exactly once per file. Each micro-batch takes the distinct weeks it
+    touched across the four tables and calls ``maintain_gold`` once.
+    Returns the weeks rebuilt, in batch order.
+
+    Raises ``TimeoutError`` (after stopping the query) when the stream
+    has not drained within ``timeout_s``, so no query is left running
+    on the checkpoint."""
     rebuilt: list[str] = []
 
-    for t in SILVER_TABLES:
-        schema = spark.read.parquet(f"{silver_root}/{t}").schema
+    def process(batch_df: DataFrame, batch_id: int) -> None:
+        weeks = {r["snapshot_week"] for r in batch_df.distinct().collect()}
+        rebuilt.extend(maintain_gold(spark, silver_root, gold_root, emp_title_top, weeks))
 
-        def process(batch_df: DataFrame, batch_id: int) -> None:
-            weeks = {
-                r["wk"]
-                for r in batch_df.select(
-                    F.col("snapshot_week").cast("string").alias("wk")
-                )
-                .distinct()
-                .collect()
-            }
-            rebuilt.extend(
-                maintain_gold(spark, silver_root, gold_root, emp_title_top, weeks)
-            )
-
-        q = (
-            file_stream(spark, f"{silver_root}/{t}", schema)
-            .writeStream.foreachBatch(process)
-            .option("checkpointLocation", f"{checkpoint_root}/{t}")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(timeout_s)
+    touched = reduce(
+        DataFrame.union, [file_stream(spark, f"{silver_root}/{t}", WEEK_ONLY) for t in SILVER_TABLES]
+    )
+    q = (
+        touched.writeStream.foreachBatch(process)
+        .option("checkpointLocation", f"{checkpoint_root}/silver_union")
+        .trigger(availableNow=True)
+        .start()
+    )
+    if not q.awaitTermination(timeout_s):
+        q.stop()
+        raise TimeoutError(f"incremental_gold did not drain within {timeout_s}s")
     return rebuilt

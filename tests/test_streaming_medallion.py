@@ -195,3 +195,154 @@ def test_maintain_gold_backfills_half_written_week(spark, tmp_path_factory):
     rebuilt = maintain_gold(spark, silver_root, gold_root, emp_top)
     assert victim in rebuilt
     assert victim in partition_weeks(spark, f"{gold_root}/label_store")
+
+
+@pytest.fixture(scope="module")
+def silver_frames(spark):
+    """The four silver tables built from the fixture rows, the pinned
+    emp_title dictionary and the sorted snapshot weeks."""
+    from mle_proj_datapipeline_spark.plans.medallion import (
+        silver_credit_history,
+        silver_demographic,
+        silver_financial,
+        top_k_categories,
+    )
+    from mle_proj_datapipeline_spark.schemas import DOMAIN_TABLES
+
+    raw = gen_domain_tables()
+    transforms = {
+        "credit_history": silver_credit_history,
+        "demographic": silver_demographic,
+        "financial": silver_financial,
+        "loan_terms": silver_loan_terms,
+    }
+    silvers = {
+        t: fn(to_bronze(spark.createDataFrame(raw[t], schema=DOMAIN_TABLES[t])))
+        for t, fn in transforms.items()
+    }
+    weeks = sorted(
+        r["snapshot_week"] for r in silvers["loan_terms"].select("snapshot_week").distinct().collect()
+    )
+    emp_top = [c.strip().upper() for c in top_k_categories(silvers["demographic"], "emp_title", 10)]
+    return silvers, emp_top, weeks
+
+
+def _land_silver(silver_root, silvers, cond):
+    """Land the rows matching ``cond`` in every silver table (dynamic
+    partition overwrite, the way incremental_silver writes)."""
+    for t, df in silvers.items():
+        df.filter(cond).write.mode("overwrite").option(
+            "partitionOverwriteMode", "dynamic"
+        ).partitionBy("snapshot_week").parquet(f"{silver_root}/{t}")
+
+
+def _feature_rows(df, week):
+    cols = ["id", "snapshot_week", "grade_ordinal", "loan_amnt", "emp_length_years"]
+    return sorted(
+        tuple(str(v) for v in r)
+        for r in df.filter(F.col("snapshot_week").cast("string") == week).select(*cols).collect()
+    )
+
+
+def test_incremental_gold_rebuilds_landed_week_once(spark, silver_frames, tmp_path_factory, monkeypatch):
+    """A week landing in all four silver tables is one micro-batch of
+    one stream: maintain_gold runs once and the week is rebuilt once
+    (not once per source table)."""
+    from mle_proj_datapipeline_spark.streaming import gold
+
+    silvers, emp_top, weeks = silver_frames
+    silver_root = str(tmp_path_factory.mktemp("silver_once"))
+    gold_root = str(tmp_path_factory.mktemp("gold_once"))
+    ckpt = str(tmp_path_factory.mktemp("ckpt_once"))
+    new = weeks[-1]
+
+    _land_silver(silver_root, silvers, F.col("snapshot_week") < new)
+    assert sorted(gold.incremental_gold(spark, silver_root, gold_root, ckpt, emp_top)) == weeks[:-1]
+
+    calls = []
+    real = gold.maintain_gold
+
+    def counted(spark, silver_root, gold_root, emp_title_top, touched_weeks=None):
+        calls.append(touched_weeks)
+        return real(spark, silver_root, gold_root, emp_title_top, touched_weeks)
+
+    monkeypatch.setattr(gold, "maintain_gold", counted)
+    _land_silver(silver_root, silvers, F.col("snapshot_week") == new)
+    assert gold.incremental_gold(spark, silver_root, gold_root, ckpt, emp_top) == [new]
+    assert calls == [{new}]
+    assert not spark.streams.active
+
+
+def test_incremental_gold_replays_batch_after_crash(spark, silver_frames, tmp_path_factory, monkeypatch):
+    """The rebuild runs before the micro-batch commits: when
+    maintain_gold crashes on a revised week, the next run replays the
+    batch and gold ends up matching the revised silver."""
+    from pyspark.errors import StreamingQueryException
+
+    from mle_proj_datapipeline_spark.plans.medallion import gold_feature_store
+    from mle_proj_datapipeline_spark.streaming import gold
+
+    silvers, emp_top, weeks = silver_frames
+    silver_root = str(tmp_path_factory.mktemp("silver_crash"))
+    gold_root = str(tmp_path_factory.mktemp("gold_crash"))
+    ckpt = str(tmp_path_factory.mktemp("ckpt_crash"))
+    _land_silver(silver_root, silvers, F.lit(True))
+    gold.incremental_gold(spark, silver_root, gold_root, ckpt, emp_top)
+
+    # Revise one week of loan_terms (every amount corrected upwards).
+    victim = weeks[len(weeks) // 2]
+    in_victim = F.col("snapshot_week") == victim
+    loans = silvers["loan_terms"]
+    revised_week = loans.filter(in_victim).withColumn("loan_amnt", F.col("loan_amnt") + 1000)
+    _land_silver(silver_root, {"loan_terms": revised_week}, F.lit(True))
+    revised = dict(silvers, loan_terms=loans.filter(~in_victim).unionByName(revised_week))
+
+    def expected(tables):
+        return _feature_rows(
+            gold_feature_store(
+                tables["credit_history"].drop("snapshot_week"),
+                tables["demographic"].drop("snapshot_week"),
+                tables["financial"].drop("snapshot_week"),
+                tables["loan_terms"],
+                emp_title_top=emp_top,
+            ),
+            victim,
+        )
+
+    feature_path = f"{gold_root}/feature_store"
+    stale = _feature_rows(spark.read.parquet(feature_path), victim)
+    assert stale == expected(silvers) != expected(revised)
+
+    real = gold.maintain_gold
+
+    def crash_once(*args, **kwargs):
+        monkeypatch.setattr(gold, "maintain_gold", real)
+        raise RuntimeError("injected crash before the gold write")
+
+    monkeypatch.setattr(gold, "maintain_gold", crash_once)
+    with pytest.raises(StreamingQueryException, match="injected crash"):
+        gold.incremental_gold(spark, silver_root, gold_root, ckpt, emp_top)
+    assert not spark.streams.active
+    assert _feature_rows(spark.read.parquet(feature_path), victim) == stale
+
+    assert gold.incremental_gold(spark, silver_root, gold_root, ckpt, emp_top) == [victim]
+    assert _feature_rows(spark.read.parquet(feature_path), victim) == expected(revised)
+
+
+def test_incremental_gold_timeout_stops_query(spark, silver_frames, tmp_path_factory):
+    """A stream that does not drain in time is stopped and reported,
+    never left running on the checkpoint; the next call resumes it."""
+    from mle_proj_datapipeline_spark.streaming.gold import incremental_gold, partition_weeks
+
+    silvers, emp_top, weeks = silver_frames
+    silver_root = str(tmp_path_factory.mktemp("silver_timeout"))
+    gold_root = str(tmp_path_factory.mktemp("gold_timeout"))
+    ckpt = str(tmp_path_factory.mktemp("ckpt_timeout"))
+    _land_silver(silver_root, silvers, F.lit(True))
+
+    with pytest.raises(TimeoutError):
+        incremental_gold(spark, silver_root, gold_root, ckpt, emp_top, timeout_s=0.001)
+    assert not spark.streams.active
+
+    incremental_gold(spark, silver_root, gold_root, ckpt, emp_top)
+    assert partition_weeks(spark, f"{gold_root}/feature_store") == set(weeks)
